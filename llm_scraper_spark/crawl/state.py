@@ -49,14 +49,10 @@ two invariants, both tested with a simulated mid-commit crash
   also truncate them — the cleanup makes the snapshot property hold for
   out-of-band readers too).
 
-This is the Iceberg-snapshot analogue on a plain filesystem. With an
-Iceberg catalog on the classpath (``iceberg_catalog`` below, auto-detected
-from spark.sql.catalog.* conf), the per-table writes become real Iceberg
-partition commits and the ledger rename remains the cross-table
-transaction point — Spark cannot commit multiple Iceberg tables in one
-transaction, so the ordered-commit + replay protocol is the correct shape
-there too (the catalog path is exercised only where the jars exist; this
-sandbox has none, so it stays a thin, documented routing layer).
+This is the Iceberg-snapshot analogue on a plain filesystem: all state
+is parquet ``wave=K`` dirs plus the JSON ledger, committed in the ordered
+protocol above. There is no catalog routing; real Iceberg tables would
+need the Iceberg runtime jars, which the repository does not ship.
 The seen set is append-only (delta per wave), so resuming reads
 ``seen_delta/wave<=K`` — no rewrite of 10^10 rows per wave.
 """
@@ -70,31 +66,14 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 
 
-def _detect_iceberg_catalog(spark: SparkSession) -> str | None:
-    """Name of the first configured Iceberg catalog, or None.
-
-    Presence check only — ``spark.sql.catalog.<name> =
-    org.apache.iceberg.spark.SparkCatalog`` (the standard wiring)."""
-    try:
-        for k, v in spark.sparkContext.getConf().getAll():
-            if k.startswith("spark.sql.catalog.") and k.count(".") == 3 \
-                    and "iceberg" in (v or "").lower():
-                return k.rsplit(".", 1)[1]
-    except Exception:
-        pass
-    return None
-
-
 class CrawlState:
     def __init__(self, spark: SparkSession, state_dir: str,
-                 iceberg_catalog: str | None = None,
                  seen_layout: str = "delta",
                  n_seen_buckets: int = 32):
         if seen_layout not in ("delta", "bucketed"):
             raise ValueError(f"unknown seen_layout {seen_layout!r}")
         self.spark = spark
         self.dir = state_dir
-        self.catalog = iceberg_catalog or _detect_iceberg_catalog(spark)
         # "bucketed": the seen set lives in a bucketBy(url_hash) catalog
         # table, so the per-wave dedup anti-join plans with ZERO Exchange
         # on the seen side — at the 10^10 design point re-shuffling the
@@ -105,6 +84,10 @@ class CrawlState:
         os.makedirs(state_dir, exist_ok=True)
         ledger = self.read_ledger()
         recorded = ledger.get("seen_layout")
+        if recorded is None and ledger["waves"]:
+            # ledgers from before the layout was recorded are delta dirs:
+            # opening one as bucketed would read an empty seen set
+            recorded = "delta"
         if recorded is not None and recorded != seen_layout:
             raise ValueError(
                 f"state dir was created with seen_layout={recorded!r}; "
@@ -228,9 +211,6 @@ class CrawlState:
     def _p(self, table: str, wave: int) -> str:
         return os.path.join(self.dir, table, f"wave={wave}")
 
-    def _tbl(self, table: str) -> str:
-        return f"{self.catalog}.crawl.{table}"
-
     # --- bucketed seen layout ------------------------------------------
     # The seen set as a bucketBy(url_hash) parquet CATALOG table: every
     # wave APPENDS its delta (<= n_buckets files), and the per-wave
@@ -350,23 +330,9 @@ class CrawlState:
         if table == "seen_delta" and self.seen_layout == "bucketed":
             self._write_seen_bucketed(wave, df)
             return
-        if self.catalog:
-            # Iceberg routing: replace exactly this wave's partition — one
-            # atomic Iceberg snapshot commit per table, same ordered
-            # protocol (ledger still last). Requires the catalog's jars;
-            # see module docstring.
-            from pyspark.sql import functions as F
-
-            (df.withColumn("_wave_part", F.lit(wave))
-             .writeTo(self._tbl(table))
-             .overwritePartitions())
-            return
         df.write.mode("overwrite").parquet(self._p(table, wave))
 
     def read(self, table: str, wave: int) -> DataFrame:
-        if self.catalog:
-            return (self.spark.read.table(self._tbl(table))
-                    .where(f"_wave_part = {int(wave)}").drop("_wave_part"))
         return self.spark.read.parquet(self._p(table, wave))
 
     def frontier_base_wave(self) -> int | None:
@@ -477,13 +443,6 @@ class CrawlState:
         if self.seen_layout == "bucketed":
             return self._read_seen_bucketed(upto_wave)
         committed = self._committed_for("seen_delta")
-        if self.catalog:
-            waves = sorted(w for w in committed if w <= upto_wave)
-            if not waves:
-                return None
-            return (self.spark.read.table(self._tbl("seen_delta"))
-                    .where(f"_wave_part <= {int(upto_wave)}")
-                    .drop("_wave_part"))
         paths = [
             self._p("seen_delta", w)
             for w in range(upto_wave + 1)
@@ -576,13 +535,6 @@ class CrawlState:
         ``part-compact-*`` files at the table root — those hold only
         rows of waves that were committed when the compaction ran, so
         they are committed by construction and read unconditionally."""
-        if self.catalog:
-            waves = sorted(self._committed_for(table))
-            if not waves:
-                return None
-            return (self.spark.read.table(self._tbl(table))
-                    .where(f"_wave_part in ({','.join(map(str, waves))})")
-                    .withColumnRenamed("_wave_part", "wave_part"))
         base = os.path.join(self.dir, table)
         if not os.path.exists(base):
             return None

@@ -3,9 +3,9 @@ r"""The crawl wave loop — the engine's top-level dataflow (SURVEY.md §3.2).
 Each wave is one batch of the reference's consume-loop
 (/root/reference/scraper.py:64-76) re-expressed as DataFrame stages:
 
-    pending --politeness window--> scheduled --fetch (mapInPandas)-->
-    pages --chunker UDF--> documents
-         \--outlinks explode--> canonicalize+hash --robots gate-->
+    pending --politeness window--> scheduled --fetch (mapInPandas: page,
+    spans, doc id, canonical outlinks)--> pages --> documents
+         \--outlinks explode--> hash --robots gate-->
            in-wave first-occurrence dedup --bloom + anti-join vs seen-->
            assign global seq --> frontier append + seen delta
 
@@ -34,31 +34,24 @@ from ..operators import cuckoo as cuckoo_ops
 from ..operators import frontier as frontier_ops
 from ..operators import seen as seen_ops
 from ..operators.checkpoints import local_checkpoint_tracked, release_checkpoint
-from ..operators.chunker import spans_from_text, uuid5_url
 from ..operators.robots import gate_frontier
 from ..sources.synthetic import synth_page
 from .state import CrawlState
 
-FETCH_RESULT_DDL = (
-    "url string, canonical_url string, host string, salt int, url_hash long, "
-    "priority double, wave int, seq long, content string, "
-    "outlinks array<string>, media_refs array<string>, ok boolean"
-)
-
-# the FUSED fetch contract (r5): canonicalization of outlinks, the
-# chunker, and the uuid5 doc id all run inside the fetch batch — the
-# page corpus crosses the Arrow boundary ONCE instead of three times
-# (fetch out, chunker in/out, canonicalize in/out). The wave loop
-# detects the extra columns and skips its own spans/canonicalize
-# stages; url_hash stays native xxhash64 (JVM, after the explode).
+# The fetch contract: canonicalization of outlinks, the chunker and the
+# uuid5 doc id all run inside the fetch batch, so the page corpus crosses
+# the Arrow boundary ONCE instead of three times (fetch out, chunker
+# in/out, canonicalize in/out). url_hash stays native xxhash64 (JVM,
+# after the explode). ``content`` is the raw page text for archive mode;
+# CrawlRun drops it before the pages checkpoint when nothing archives.
 SPAN_DDL = ("array<struct<kind:string,text:string,"
             "media_ref:string,offset:int>>")
-FETCH_FUSED_DDL = (
+FETCH_DDL = (
     "url string, canonical_url string, host string, salt int, url_hash long, "
     "priority double, wave int, seq long, "
     f"doc_id string, spans {SPAN_DDL}, "
     "outlinks_canon array<struct<url:string,canonical_url:string,"
-    "host:string>>, ok boolean"
+    "host:string>>, ok boolean, content string"
 )
 
 Fetcher = Callable[[DataFrame], DataFrame]
@@ -67,11 +60,12 @@ _FETCH_COLS = ["url", "canonical_url", "host", "salt", "url_hash",
                "priority", "wave", "seq"]
 
 
-def _fused_frame(pdf, contents, outlinks_list, media_list, oks):
-    """Build the fused-output batch: spans + doc_id + canonicalized
-    outlink structs, with ONE canonicalize pass over the batch's
-    flattened outlinks (same canonicalize_batch the standalone UDF
-    uses, so the fused and unfused paths agree byte-for-byte)."""
+def fetch_frame(pdf, contents, outlinks_list, media_list, oks):
+    """Build one FETCH_DDL batch from a scheduled batch and its fetched
+    pages: spans + doc_id + canonicalized outlink structs + raw content,
+    with ONE canonicalize pass over the batch's flattened outlinks (the
+    same canonicalize_batch the standalone UDF uses, so URLs agree
+    byte-for-byte). Custom fetchers build their output with this."""
     import pandas as pd
 
     from ..functions.urls import canonicalize_batch
@@ -105,18 +99,15 @@ def _fused_frame(pdf, contents, outlinks_list, media_list, oks):
         i += len(links)
     out["outlinks_canon"] = structs
     out["ok"] = oks
+    out["content"] = contents
     return out
 
 
-def synthetic_fetcher(n_hosts: int = 50, fanout: int = 4,
-                      fused: bool = True) -> Fetcher:
+def synthetic_fetcher(n_hosts: int = 50, fanout: int = 4) -> Fetcher:
     """Deterministic offline fetcher over the synthetic web (sources/synthetic.py).
 
-    mapInPandas: one Arrow batch in, pages out — the slot where a real
-    deployment runs bounded async HTTP (http_fetcher below).
-    ``fused=True`` (default, the production path) chunks + canonicalizes
-    in-batch (see FETCH_FUSED_DDL); ``fused=False`` emits the plain
-    content/outlinks contract for archive mode and schema tests.
+    mapInPandas: one Arrow batch in, FETCH_DDL pages out — the slot where
+    a real deployment runs bounded async HTTP (http_fetcher below).
     """
 
     def fetch(scheduled: DataFrame) -> DataFrame:
@@ -124,29 +115,18 @@ def synthetic_fetcher(n_hosts: int = 50, fanout: int = 4,
             for pdf in batches:
                 pages = [synth_page(u, n_hosts=n_hosts, fanout=fanout)
                          for u in pdf["url"]]
-                contents = [p["content"] for p in pages]
-                outlinks = [p["outlinks"] for p in pages]
-                media = [p["media_refs"] for p in pages]
-                if fused:
-                    yield _fused_frame(pdf, contents, outlinks, media,
-                                       [True] * len(pages))
-                else:
-                    out = pdf[_FETCH_COLS].copy()
-                    out["content"] = contents
-                    out["outlinks"] = outlinks
-                    out["media_refs"] = media
-                    out["ok"] = True
-                    yield out
+                yield fetch_frame(pdf, [p["content"] for p in pages],
+                                  [p["outlinks"] for p in pages],
+                                  [p["media_refs"] for p in pages],
+                                  [True] * len(pages))
 
-        return scheduled.select(*_FETCH_COLS).mapInPandas(
-            gen, schema=FETCH_FUSED_DDL if fused else FETCH_RESULT_DDL)
+        return scheduled.select(*_FETCH_COLS).mapInPandas(gen, schema=FETCH_DDL)
 
     return fetch
 
 
 def http_fetcher(timeout_s: float = 15.0, max_concurrent_per_task: int = 8,
-                 user_agent: str = "llm-scraper-spark/0.1",
-                 fused: bool = True) -> Fetcher:
+                 user_agent: str = "llm-scraper-spark/0.1") -> Fetcher:
     """Real network fetcher: bounded thread-pool urllib GETs inside
     mapInPandas (reference envelope: 8 concurrent, 15s timeout,
     follow_redirects=True, src/llm_scraper/scraper.py:37-41,
@@ -154,6 +134,7 @@ def http_fetcher(timeout_s: float = 15.0, max_concurrent_per_task: int = 8,
     4xx/5xx raise and the page fails (ok=False, crawl continues), and
     links/media absolutize against the POST-redirect URL — the
     reference passes ``str(response.url)`` to Article.from_html.
+    Emits the same FETCH_DDL batches as synthetic_fetcher.
     Exercised by the loopback battery in tests/test_http_fetch.py."""
 
     def fetch(scheduled: DataFrame) -> DataFrame:
@@ -179,30 +160,12 @@ def http_fetcher(timeout_s: float = 15.0, max_concurrent_per_task: int = 8,
             with ThreadPoolExecutor(max_workers=max_concurrent_per_task) as pool:
                 for pdf in batches:
                     results = list(pool.map(get, pdf["url"]))
-                    contents = [r[0] for r in results]
-                    outlinks = [r[1] for r in results]
-                    media = [r[2] for r in results]
-                    oks = [r[3] for r in results]
-                    if fused:
-                        out = _fused_frame(pdf, contents, outlinks, media, oks)
-                        # the raw page text rides along: the WARC archive
-                        # and parity tests need it, and for live HTTP the
-                        # network dominates — the extra columns are noise
-                        out["content"] = contents
-                        out["outlinks"] = outlinks
-                        out["media_refs"] = media
-                    else:
-                        out = pdf[_FETCH_COLS].copy()
-                        out["content"] = contents
-                        out["outlinks"] = outlinks
-                        out["media_refs"] = media
-                        out["ok"] = oks
-                    yield out
+                    yield fetch_frame(pdf, [r[0] for r in results],
+                                      [r[1] for r in results],
+                                      [r[2] for r in results],
+                                      [r[3] for r in results])
 
-        schema = (FETCH_FUSED_DDL + ", content string, "
-                  "outlinks array<string>, media_refs array<string>"
-                  if fused else FETCH_RESULT_DDL)
-        return scheduled.select(*_FETCH_COLS).mapInPandas(gen, schema=schema)
+        return scheduled.select(*_FETCH_COLS).mapInPandas(gen, schema=FETCH_DDL)
 
     return fetch
 
@@ -219,9 +182,8 @@ class CrawlRun:
         robots: DataFrame | None = None,
         default_budget: int = frontier_ops.DEFAULT_BUDGET,
         n_salts: int = frontier_ops.DEFAULT_SALTS,
-        use_bloom: bool = True,
         link_priority: float = 1.0,
-        seen_filter: str | None = None,
+        seen_filter: str | None = "bloom",
         compact_every: int = 8,
         scope_filter: bool = False,
         archive_dir: str | None = None,
@@ -240,7 +202,6 @@ class CrawlRun:
         self.robots = robots
         self.default_budget = default_budget
         self.n_salts = n_salts
-        self.use_bloom = use_bloom
         self.link_priority = link_priority
         # opt-in frontier URL hygiene (functions/urls.py): strip tracking/
         # session params from canonical URLs (re-hashing natively so alias
@@ -252,12 +213,8 @@ class CrawlRun:
         # the standing approximate seen-filter: "bloom" (default) or
         # "cuckoo" (operators/cuckoo.py — deletable fingerprints, same
         # no-false-negative contract, same executor-side build + per-wave
-        # delta merge); None / use_bloom=False disables the pre-filter
-        # and every candidate takes the exact anti-join
-        if seen_filter is None:
-            seen_filter = "bloom" if use_bloom else None
-        elif not use_bloom:
-            seen_filter = None
+        # delta merge); None disables the pre-filter and every candidate
+        # takes the exact anti-join
         if seen_filter not in (None, "bloom", "cuckoo"):
             raise ValueError(f"unknown seen_filter {seen_filter!r}")
         self.seen_filter = seen_filter
@@ -322,12 +279,13 @@ class CrawlRun:
         missing (fresh run / resume) or saturated; otherwise the per-wave
         delta merge (in run_wave) keeps it current without touching the
         10^10-row table (VERDICT #4)."""
-        if self.seen_filter is None or seen_df is None:
-            return None
         # the previous wave's delta must be merged before this wave
         # tags candidates: a missing merge would mark last wave's URLs
-        # "definitely new" and re-enqueue them (false negative)
+        # "definitely new" and re-enqueue them (false negative). Joined
+        # on every path, so at most one merge is ever in flight.
         self._join_bloom_delta()
+        if self.seen_filter is None or seen_df is None:
+            return None
         if self._bloom is None or self._bloom.saturated():
             # next_seq == total URLs ever enqueued == |seen| (seq is
             # assigned per enqueue), so capacity needs no counting job
@@ -482,12 +440,6 @@ class CrawlRun:
                        _ck, wave_ck, pool, write_futs, _submit_write):
         import time as _time
 
-        # with the filter disabled the tag path (whose _standing_bloom
-        # joins the previous wave's delta future) never runs — join the
-        # trivial future here to keep the single-in-flight invariant
-        if self.seen_filter is None:
-            self._join_bloom_delta()
-
         if self.robots is not None:
             pending_gated = gate_frontier(pending, self.robots)
         else:
@@ -517,7 +469,11 @@ class CrawlRun:
         _submit_write("write_fetched", "fetched", wave,
                       scheduled.select("url_hash"))
 
-        pages = _ck(self.fetcher(scheduled))
+        pages = self.fetcher(scheduled)
+        if not self.archive_dir:
+            # only the archive reads the raw page text
+            pages = pages.drop("content")
+        pages = _ck(pages)
         _mark("fetch")
 
         if self.archive_dir:
@@ -525,11 +481,6 @@ class CrawlRun:
 
             from ..sources.warc import write_warc_cdx
 
-            if "content" not in pages.columns:
-                raise ValueError(
-                    "archive_dir needs the page payload: use a fetcher "
-                    "that emits 'content' (http_fetcher, or "
-                    "synthetic_fetcher(fused=False))")
             arc_dir = os.path.join(self.archive_dir, f"wave={wave}")
             recs = pages.select(
                 F.col("url").alias("target_uri"),
@@ -560,22 +511,11 @@ class CrawlRun:
         timings["bloom_delta"] = getattr(self, "_last_bloom_join_wait", 0.0)
         self._last_bloom_join_wait = 0.0
 
-        # --- documents: uuid5 doc id + interleaved spans (production 512/50)
-        fused = "spans" in pages.columns
-        if fused:
-            # fused fetch contract: doc_id + spans were computed inside
-            # the fetch batch — the page corpus never re-crosses the
-            # Arrow boundary for chunking
-            docs = (pages.filter(F.col("ok"))
-                    .select("doc_id", "spans", "url", "host", "wave", "seq"))
-        else:
-            docs = (
-                pages.filter(F.col("ok"))
-                .withColumn("doc_id", uuid5_url(F.col("canonical_url")))
-                .withColumn("spans", spans_from_text(F.col("content"),
-                                                     F.col("media_refs")))
-                .select("doc_id", "spans", "url", "host", "wave", "seq")
-            )
+        # --- documents: uuid5 doc id + interleaved spans (production
+        # 512/50), both computed inside the fetch batch — the page corpus
+        # never re-crosses the Arrow boundary for chunking
+        docs = (pages.filter(F.col("ok"))
+                .select("doc_id", "spans", "url", "host", "wave", "seq"))
         # the slowest table write (the full span payload) — launch now so
         # it runs under the discovery/dedup/seq phases
         _submit_write("write_documents", "documents", wave, docs)
@@ -585,39 +525,24 @@ class CrawlRun:
         # downstream reads them — dropping them narrows the dedup shuffle
         # rows. membership tag FUSED into the discovery checkpoint below
         # (computed once during that materialization).
-        if fused:
-            # outlinks arrive pre-canonicalized (struct per link); only
-            # the 64-bit hash stays JVM-side — native xxhash64, codegen
-            cand = (
-                pages.select(
-                    F.col("seq").alias("parent_seq"),
-                    F.posexplode_outer(F.col("outlinks_canon"))
-                    .alias("link_idx", "_l"),
-                )
-                .filter(F.col("_l").isNotNull())
-                .select(
-                    F.col("_l.url").alias("url"),
-                    F.col("_l.canonical_url").alias("canonical_url"),
-                    F.col("_l.host").alias("host"),
-                    (F.col("parent_seq") * F.lit(1_000_000)
-                     + F.col("link_idx")).alias("_disc_ord"),
-                )
-                .withColumn("url_hash", F.xxhash64(F.col("canonical_url")))
+        # outlinks arrive pre-canonicalized (struct per link); only the
+        # 64-bit hash stays JVM-side — native xxhash64, codegen
+        cand = (
+            pages.select(
+                F.col("seq").alias("parent_seq"),
+                F.posexplode_outer(F.col("outlinks_canon"))
+                .alias("link_idx", "_l"),
             )
-        else:
-            links = (
-                pages.select(
-                    F.col("seq").alias("parent_seq"),
-                    F.posexplode_outer(F.col("outlinks")).alias("link_idx", "url"),
-                )
-                .filter(F.col("url").isNotNull())
-                .withColumn(
-                    "_disc_ord",
-                    F.col("parent_seq") * F.lit(1_000_000) + F.col("link_idx"),
-                )
+            .filter(F.col("_l").isNotNull())
+            .select(
+                F.col("_l.url").alias("url"),
+                F.col("_l.canonical_url").alias("canonical_url"),
+                F.col("_l.host").alias("host"),
+                (F.col("parent_seq") * F.lit(1_000_000)
+                 + F.col("link_idx")).alias("_disc_ord"),
             )
-            cand = with_canonical(links.select("url", "_disc_ord"),
-                                  key_hex=False)
+            .withColumn("url_hash", F.xxhash64(F.col("canonical_url")))
+        )
         if self.scope_filter:
             cand = self._apply_scope(cand)
         cand = seen_ops.first_occurrence_dedup(cand, "url_hash", "_disc_ord")
@@ -726,7 +651,6 @@ class CrawlRun:
 
             self._bloom_pool = _TPE(max_workers=1)
         # any prior in-flight merge was joined by _standing_bloom above
-        # (or by the defensive join in _run_wave_body's entry)
         assert self._bloom_fut is None
         self._bloom_ck_ids = nfr_ids
         self._bloom_fut = self._bloom_pool.submit(_bloom_delta)

@@ -20,13 +20,13 @@ def _mk_seeds(spark, n):
 
 
 def _run_spark_crawl(spark, tmp_path, n_seeds, n_waves, budget=3, robots=None,
-                     use_bloom=True, seen_filter=None, seen_layout="delta"):
+                     seen_filter="bloom", seen_layout="delta"):
     state_dir = str(tmp_path / "state")
     shutil.rmtree(state_dir, ignore_errors=True)
     run = CrawlRun(
         spark, state_dir,
         fetcher=synthetic_fetcher(n_hosts=N_HOSTS, fanout=FANOUT),
-        robots=robots, default_budget=budget, n_salts=4, use_bloom=use_bloom,
+        robots=robots, default_budget=budget, n_salts=4,
         seen_filter=seen_filter, seen_layout=seen_layout, n_seen_buckets=8,
     )
     run.run(n_waves, seeds=_mk_seeds(spark, n_seeds))
@@ -49,20 +49,24 @@ def _spark_schedule_log(run):
     ]
 
 
-@pytest.mark.parametrize("use_bloom,seen_filter,seen_layout", [
-    (True, "bloom", "delta"),    # default: sharded-Bloom + anti-join
-    (True, "cuckoo", "delta"),   # cuckoo-filter pre-filter
-    (False, None, "delta"),      # exact anti-join only
-    (True, "bloom", "bucketed"),    # bucketed catalog seen table
-    (False, None, "bucketed"),      # every candidate takes the
-                                    # exchange-free bucketed anti-join
+# ids keep the names these cases had when a separate on/off bloom flag
+# led the parametrization, so results stay comparable across history
+@pytest.mark.parametrize("seen_filter,seen_layout", [
+    # default: sharded-Bloom + anti-join
+    pytest.param("bloom", "delta", id="True-bloom-delta"),
+    # cuckoo-filter pre-filter
+    pytest.param("cuckoo", "delta", id="True-cuckoo-delta"),
+    # exact anti-join only
+    pytest.param(None, "delta", id="False-None-delta"),
+    # bucketed catalog seen table
+    pytest.param("bloom", "bucketed", id="True-bloom-bucketed"),
+    # every candidate takes the exchange-free bucketed anti-join
+    pytest.param(None, "bucketed", id="False-None-bucketed"),
 ])
-def test_crawl_matches_simulator(spark, tmp_path, use_bloom, seen_filter,
-                                 seen_layout):
+def test_crawl_matches_simulator(spark, tmp_path, seen_filter, seen_layout):
     n_seeds, n_waves, budget = 40, 3, 3
     run = _run_spark_crawl(spark, tmp_path, n_seeds, n_waves, budget,
-                           use_bloom=use_bloom, seen_filter=seen_filter,
-                           seen_layout=seen_layout)
+                           seen_filter=seen_filter, seen_layout=seen_layout)
     seed_urls = [r["url"] for r in
                  _mk_seeds(spark, n_seeds).orderBy("seq").collect()]
     sim = _sim(seed_urls, n_waves, budget)
@@ -339,16 +343,6 @@ def test_feature_combination_crawl_equality(spark, tmp_path):
             == combo.state.read_ledger()["next_seq"])
 
 
-def test_archive_requires_content_column(spark, tmp_path):
-    """Archive mode needs the raw payload; a fused fetcher (no content
-    column) must fail loudly at the wave, not write empty WARCs."""
-    run = CrawlRun(spark, str(tmp_path / "state"),
-                   fetcher=synthetic_fetcher(n_hosts=4, fanout=2),
-                   archive_dir=str(tmp_path / "arc"))
-    with pytest.raises(ValueError, match="content"):
-        run.run(1, seeds=_mk_seeds(spark, 10))
-
-
 def test_output_table_compaction_in_wave_loop(spark, tmp_path, monkeypatch):
     """VERDICT r4 #6: CrawlRun(compact_tables_every=K) folds the
     append-only output tables (documents/schedule_log/metrics) at wave
@@ -516,6 +510,39 @@ def test_bucketed_seen_crash_and_resume_exact(spark, tmp_path, monkeypatch):
                    seen_layout="bucketed", n_seen_buckets=32)
 
 
+def test_unrecorded_layout_ledger_refuses_bucketed(spark, tmp_path):
+    """A ledger with committed waves but no ``seen_layout`` key predates
+    the recorded layout, so its seen set is delta dirs: opening it as
+    bucketed would read an empty seen set and re-enqueue every URL."""
+    import json
+    import os
+
+    from llm_scraper_spark.crawl.state import CrawlState
+
+    d = str(tmp_path / "legacy")
+    os.makedirs(d)
+    with open(os.path.join(d, "ledger.json"), "w") as f:
+        json.dump({"waves": [{"wave": -1, "next_seq": 10, "seeded": 10}],
+                   "next_seq": 10}, f)
+    with pytest.raises(ValueError, match="seen_layout"):
+        CrawlState(spark, d, seen_layout="bucketed")
+    assert CrawlState(spark, d).seen_layout == "delta"
+
+
+def test_standing_filter_joins_delta_without_seen_table(spark, tmp_path):
+    """The in-flight bloom-delta merge is joined even when there is no
+    seen table to build the standing filter from, so the next wave's
+    single-merge-in-flight invariant holds on that path too."""
+    from concurrent.futures import Future
+
+    run = CrawlRun(spark, str(tmp_path / "state"))
+    done = Future()
+    done.set_result(0.0)
+    run._bloom_fut = done
+    assert run._standing_bloom(None) is None
+    assert run._bloom_fut is None
+
+
 def test_compaction_preserves_crawl_equality(spark, tmp_path):
     """Delta-frontier compaction (state.compact_frontier, auto-run every
     compact_every waves) must not change the crawl: schedule log, seen
@@ -636,7 +663,7 @@ def _alias_fetcher():
     """Fetcher whose every page links to one clean URL, a tracking-param
     alias of the SAME URL, and one non-content asset — exercising the
     scope_filter splice."""
-    from llm_scraper_spark.crawl.waves import FETCH_RESULT_DDL
+    from llm_scraper_spark.crawl.waves import FETCH_DDL, fetch_frame
 
     def fetch(scheduled):
         cols = ["url", "canonical_url", "host", "salt", "url_hash",
@@ -644,7 +671,6 @@ def _alias_fetcher():
 
         def gen(batches):
             for pdf in batches:
-                out = pdf[cols].copy()
                 outlinks = []
                 for u, h in zip(pdf["canonical_url"], pdf["host"]):
                     n = abs(hash(u)) % 1000
@@ -653,13 +679,11 @@ def _alias_fetcher():
                         f"https://{h}/p/{n}?utm_source=x&gclid=g",
                         f"https://{h}/img/{n}.jpg",
                     ])
-                out["content"] = ""
-                out["outlinks"] = outlinks
-                out["media_refs"] = [[] for _ in outlinks]
-                out["ok"] = True
-                yield out
+                yield fetch_frame(pdf, [""] * len(outlinks), outlinks,
+                                  [[] for _ in outlinks],
+                                  [True] * len(outlinks))
 
-        return scheduled.select(*cols).mapInPandas(gen, schema=FETCH_RESULT_DDL)
+        return scheduled.select(*cols).mapInPandas(gen, schema=FETCH_DDL)
 
     return fetch
 
@@ -739,87 +763,6 @@ def test_crawl_deny_patterns_gate(spark, tmp_path):
     assert not (gated_urls & denied)
     # everything else the base crawl scheduled is still reachable
     assert (frontier_urls - denied - gated_urls) == set() or True
-
-
-# ---------------------------------------------------------------------------
-# Iceberg readiness (VERDICT r3 #10): the catalog branch has no jars in this
-# sandbox, so its routing + the ordered-commit protocol are pinned with a
-# fake catalog and instrumented writes instead of a live table.
-# ---------------------------------------------------------------------------
-
-def test_iceberg_catalog_detection_and_write_routing(spark, tmp_path,
-                                                     monkeypatch):
-    """crawl/state.py:73-86,191-204: a configured Iceberg catalog is
-    auto-detected, writes route through writeTo(<catalog>.crawl.<table>)
-    .overwritePartitions() with the _wave_part literal attached, and
-    reads route through spark.read.table with the wave filter."""
-    import pyspark.sql as pysql
-
-    from llm_scraper_spark.crawl import state as state_mod
-
-    # detection: a SparkConf entry spark.sql.catalog.<name> = ...Iceberg...
-    class FakeConf:
-        def getAll(self):
-            return [("spark.app.name", "x"),
-                    ("spark.sql.catalog.icecat",
-                     "org.apache.iceberg.spark.SparkCatalog"),
-                    ("spark.sql.catalog.icecat.type", "hadoop")]
-
-    class FakeSC:
-        def getConf(self):
-            return FakeConf()
-
-    class FakeSpark:
-        sparkContext = FakeSC()
-
-    assert state_mod._detect_iceberg_catalog(FakeSpark()) == "icecat"
-    # .type sub-key (4 dots) and non-iceberg values must NOT match
-    class NoCatConf:
-        def getAll(self):
-            return [("spark.sql.catalog.hive", "HiveCatalogImpl")]
-
-    class NoCatSC:
-        def getConf(self):
-            return NoCatConf()
-
-    class NoCatSpark:
-        sparkContext = NoCatSC()
-
-    assert state_mod._detect_iceberg_catalog(NoCatSpark()) is None
-
-    # write routing: stub writeTo on the CONCRETE DataFrame class (the
-    # classic backend subclasses the pyspark.sql.DataFrame ABC and
-    # overrides writeTo, so patching the base would not intercept)
-    calls = []
-
-    class FakeWriter:
-        def __init__(self, df, table):
-            self.df, self.table = df, table
-
-        def overwritePartitions(self):
-            calls.append((self.table, self.df.columns))
-
-    st = state_mod.CrawlState(spark, str(tmp_path), iceberg_catalog="icecat")
-    df = spark.range(3).selectExpr("id AS url_hash")
-    monkeypatch.setattr(type(df), "writeTo",
-                        lambda self, t: FakeWriter(self, t))
-    st.write("fetched", 4, df)
-    assert calls == [("icecat.crawl.fetched", ["url_hash", "_wave_part"])]
-
-    # read routing: spark.read.table(<catalog>.crawl.<table>) + wave filter
-    tables = []
-
-    class FakeReader:
-        def table(self, name):
-            tables.append(name)
-            return spark.range(2).selectExpr(
-                "id AS url_hash", "CAST(4 AS INT) AS _wave_part")
-
-    monkeypatch.setattr(
-        type(spark), "read", property(lambda self: FakeReader()))
-    out = st.read("fetched", 4)
-    assert tables == ["icecat.crawl.fetched"]
-    assert out.columns == ["url_hash"] and out.count() == 2
 
 
 def test_commit_protocol_order_table_writes_before_ledger(spark, tmp_path,

@@ -139,19 +139,25 @@ def test_fetch_redirect_404_500_timeout(spark, loopback):
     out = {r["url"]: r for r in
            fetch(_scheduled(spark, urls).coalesce(1)).collect()}
 
+    def links(row):
+        return [link["url"] for link in row["outlinks_canon"]]
+
+    def media(row):
+        return [s["media_ref"] for s in row["spans"] if s["kind"] == "media"]
+
     home = out[f"{base}/"]
     assert home["ok"]
     assert "welcome to the loopback site" in home["content"]
     # relative + absolute links absolutized; fragment link skipped
-    assert set(home["outlinks"]) == {f"{base}/rel/one", f"{base}/abs/two"}
-    assert home["media_refs"] == [f"{base}/img/pic.png"]
+    assert set(links(home)) == {f"{base}/rel/one", f"{base}/abs/two"}
+    assert media(home) == [f"{base}/img/pic.png"]
 
     moved = out[f"{base}/moved"]
     assert moved["ok"]
     assert "landed" in moved["content"]
     # parity with scraper.py:91 str(response.url): relative 'sibling'
     # resolves against the POST-redirect /final/page, not /moved
-    assert moved["outlinks"] == [f"{base}/final/sibling"]
+    assert links(moved) == [f"{base}/final/sibling"]
 
     # raise_for_status parity: 4xx and 5xx fail the page, not the job
     assert not out[f"{base}/missing"]["ok"]
@@ -185,7 +191,7 @@ def test_crawl_run_end_to_end_over_loopback(spark, tmp_path, loopback):
         [(f"{base}/site/p0", 1.0, 0)], "url string, priority double, seq long")
     run = CrawlRun(spark, str(tmp_path / "crawl"),
                    fetcher=http_fetcher(timeout_s=10.0),
-                   default_budget=100, use_bloom=True)
+                   default_budget=100)
     run.run(2, seeds=seeds)
 
     seen = {r["key_hex"] for r in
